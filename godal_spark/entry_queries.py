@@ -275,8 +275,8 @@ def q_knn(spark, sf_dir):
     q = _supplier_points(spark, sf_dir)
     p = _customer_points(spark, sf_dir)
     # res 6 (5.6° cells): ring block = 25 of 4096 cells — 16x more
-    # selective than round 1's res 4, and the distance-bound guarantee
-    # re-probes the rare queries whose kth neighbor lies further out
+    # selective than round 1's res 4; the rare queries whose kth neighbor
+    # lies further out re-run once at their histogram-certified radius
     out = knn_op.knn_join(q, p, k=3, q_id="qid", p_id="pid",
                           res=6, rings=2, broadcast_points=True)
     return out.selectExpr("qid", "cast(rank as bigint) as rank",
@@ -285,8 +285,10 @@ def q_knn(spark, sf_dir):
 
 def q_knn_fine(spark, sf_dir):
     """kNN at res 9 (0.70° cells) where a bare rings=1 pass WOULD drop
-    true neighbors — the distance-bound guarantee (re-probe + brute
-    tiers, knn.py) makes the result exact anyway. Same brute-force
+    true neighbors — the distance-bound guarantee (the radius pass at
+    each query cell's occupancy-certified radius, and the brute tier
+    where the histogram calls for it; knn.py) makes the result exact
+    anyway. Res 9 is above the histogram's level 8. Same brute-force
     oracle as q_knn."""
     q = _supplier_points(spark, sf_dir)
     p = _customer_points(spark, sf_dir)

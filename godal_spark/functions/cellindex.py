@@ -179,10 +179,16 @@ def spark_cell_cols(lon_col, lat_col, res: int):
     return x, y, cell
 
 
-def sql_cell_expr(lon_expr: str, lat_expr: str, res: int) -> str:
-    """Same cell id as ANSI-ish SQL text (shared by Spark SQL and the
-    DuckDB oracle so both sides derive identical join keys)."""
+def sql_cell_xy(lon_expr: str, lat_expr: str, res: int) -> tuple[str, str]:
+    """(cell_x, cell_y) of :func:`spark_cell_cols` as SQL text."""
     n = 1 << res
     x = f"least({n - 1}, greatest(0, cast(floor(({lon_expr} + 180.0) / 360.0 * {n}) as bigint)))"
     y = f"least({n - 1}, greatest(0, cast(floor(({lat_expr} + 90.0) / 180.0 * {n}) as bigint)))"
+    return x, y
+
+
+def sql_cell_expr(lon_expr: str, lat_expr: str, res: int) -> str:
+    """Same cell id as ANSI-ish SQL text (shared by Spark SQL and the
+    DuckDB oracle so both sides derive identical join keys)."""
+    x, y = sql_cell_xy(lon_expr, lat_expr, res)
     return f"(cast({res} as bigint) * {1 << _RSHIFT} + {x} * {1 << _XSHIFT} + {y})"

@@ -2,54 +2,82 @@
 reference — godal's closest analogue is Grid's invdistnn neighbor search,
 godal.go:4001-4084).
 
-Distributed shape (three tiers, each orders of magnitude smaller):
+One driver action, then one lazy plan. The guaranteed path:
 
-  1. ring pass — index both sides at one resolution (JVM arithmetic);
-     explode each query point to its ring-0..R candidate cells (built-in
+  0. occupancy histogram — the only action. Points and queries are
+     grouped by their cell at level 8 (≤ 65,536 cells a side): count and
+     min/max lon/lat. That gives |P|, |Q| and the points' bbox exactly
+     (`res=None` reads them), and, on the driver, a certified ring radius
+     for every cell holding a query at h = min(res, 8): a numpy
+     summed-area table finds the least block half-width `a` (level-h
+     cells, no longitude wrap) holding ≥ k points. Every point of that
+     block is within D = (a+1)·hypot(cw_h, ch_h) of any query in the
+     cell, so the true k-th distance is ≤ D, and a ring pass at `res` of
+     r = floor(D / min_cell) + 1 rings certifies the exact top-k (below).
+  1. ring pass — index both sides at `res` (JVM arithmetic); explode
+     each query point to its ring-0..R candidate cells (built-in
      sequence cross), equi-join on cell, distance (codegen),
-     `row_number()` top-k.
-  2. guaranteed re-probe — the ring top-k is only the TRUE top-k when
-     the k-th distance is < R·min(cell_w, cell_h): any point outside the
-     (2R+1)² block is at least that far away (the query sits somewhere
-     inside its own cell, so every block face is ≥ R cells from it).
-     Candidates at dist ≥ that bound are therefore dropped BEFORE the
-     top-k sort (they can never certify — guide §2.3, sort fewer rows);
-     queries left with < k in-bound candidates re-run the ring pass at
-     doubling radii (2R, 4R, ...), each pass certified by the same
-     argument, until resolved or the radius cap is hit.
-  3. brute fallback — queries that found < k candidates in reach (or
-     whose re-probe radius exceeds `max_reprobe_rings`) get an exact
-     cross-join + window pass. Pathological by construction (k close to
-     |P|, or a query in an empty region), so the cross join is tiny.
+     `row_number()` top-k. The result is the TRUE top-k when the k-th
+     distance is < R·min(cell_w, cell_h): any point outside the (2R+1)²
+     block is at least that far away (the query sits somewhere inside its
+     own cell, so every block face is ≥ R cells from it). Candidates at
+     dist ≥ that bound are dropped BEFORE the top-k sort (they can never
+     certify — guide §2.3, sort fewer rows), and a query that keeps ≥ k
+     is exact.
+  2. radius pass — each query carries its cell's certified radius
+     through the ring pass, where a marker row (null point, ranked last)
+     keeps every query in the top-k window. An uncertified query's rank-1
+     row is then exploded to its radius block while certified rows pass
+     through, and a second top-k window ranks both: no anti-join, and in
+     the plan only when some query cell needs more than `rings`.
+  3. brute — exact cross-join + window pass, unioned in only where the
+     histogram says it is needed: k > |P| (then it is the whole plan), or
+     a query cell whose radius exceeds `max_reprobe_rings`.
+
+No checkpoint and no emptiness probe, and the runtime choice is logged on
+one line. When the exact |P| fits Spark's broadcast-join threshold, the
+points are broadcast and the queries hash-partitioned by id before the
+explode, so the tiers run in one stage after that shuffle: no top-k
+window needs an exchange of its own.
 
 The ring join's cost is (2R+1)² × |Q| candidate rows BEFORE the join —
 explicit and tunable, unlike a cross join's |Q|×|P|. Euclidean degree
 metric (consistent with the oracle); swap in haversine via the same
 column expression if needed.
 
-`res=None` picks the resolution from point density (like pip.auto_res):
-aim for the (2R+1)² ring block to hold ≈ 8k candidates, estimated from
-|P| and its bounding box. Too-coarse cells make the ring pass
+`res=None` picks the resolution from point density (`auto_res`): aim
+for the (2R+1)² ring block to hold ≈ 8k candidates, estimated from |P|
+and its bounding box. Too-coarse cells make the ring pass
 near-brute-force (the round-1 res=4 configuration probed ~10 % of all
-points per query); too-fine cells push every query into the re-probe
-tier.
+points per query); too-fine cells push every query into the radius pass.
 """
 
 from __future__ import annotations
 
+import logging
 import math
+import re
 
-from pyspark.sql import DataFrame, Window, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from godal_spark.functions import cellindex
 
+log = logging.getLogger(__name__)
+
 _XSHIFT = 26
 _RSHIFT = 52
+_HIST_RES = 8
+# Plans are built from SQL text: every Column-API call is one driver→JVM
+# round-trip, and composing the ring explode from Column objects cost
+# ~3,700 of them per knn_join call (about 1 s of driver time on a 4-CPU
+# host).
+_DIST = "sqrt(pow({lon} - __plon, 2) + pow({lat} - __plat, 2))"
 
 
-def _cell_col(res: int):
-    return (F.lit(res).cast("long") * F.lit(1 << _RSHIFT).cast("long")
-            + F.col("cell_x") * F.lit(1 << _XSHIFT).cast("long") + F.col("cell_y"))
+def _lit(x: float) -> str:
+    return f"CAST({x!r} AS DOUBLE)"
 
 
 def cell_deg(res: int) -> tuple[float, float]:
@@ -58,21 +86,11 @@ def cell_deg(res: int) -> tuple[float, float]:
     return 360.0 / n, 180.0 / n
 
 
-def auto_res(points: DataFrame, k: int, rings: int = 2, *,
-             lon: str = "lon", lat: str = "lat",
+def _res_for(n_pts: int, x0, x1, y0, y1, k: int, rings: int,
              lo: int = 2, hi: int = 12, target_factor: int = 8) -> int:
-    """Resolution from point density: choose res so a query's ring block
-    ((2·rings+1)² cells) holds ≈ target_factor·k points, estimating the
-    per-cell density from |P| over its bounding-box cell span. One cheap
-    metadata agg (count + 4 min/max) — no data collect."""
-    st = points.agg(F.count("*").alias("n"),
-                    F.min(lon).alias("x0"), F.max(lon).alias("x1"),
-                    F.min(lat).alias("y0"), F.max(lat).alias("y1")).first()
-    n_pts = st["n"] or 0
     if n_pts == 0:
         return lo
-    frac = max(((st["x1"] - st["x0"]) / 360.0) * ((st["y1"] - st["y0"]) / 180.0),
-               1e-6)
+    frac = max(((x1 - x0) / 360.0) * ((y1 - y0) / 180.0), 1e-6)
     block = (2 * rings + 1) ** 2
     # want: block * n_pts / (4^res * frac) ≈ target_factor * k
     want_cells = block * n_pts / (frac * max(target_factor * k, 1))
@@ -80,38 +98,128 @@ def auto_res(points: DataFrame, k: int, rings: int = 2, *,
     return int(min(hi, max(lo, res)))
 
 
-def _ring_candidates(q: DataFrame, p: DataFrame, res: int, rings_col,
-                     q_id: str, q_lon: str, q_lat: str) -> DataFrame:
-    """Explode q to its ring cells (rings_col may be per-row), join on
-    cell, compute distance. p must carry (cell, __pid, __plon, __plat)."""
+def auto_res(points: DataFrame, k: int, rings: int = 2, *,
+             lon: str = "lon", lat: str = "lat",
+             lo: int = 2, hi: int = 12, target_factor: int = 8) -> int:
+    """Resolution from point density: choose res so a query's ring block
+    ((2·rings+1)² cells) holds ≈ target_factor·k points, estimating the
+    per-cell density from |P| over its bounding-box cell span. One cheap
+    metadata agg (count + 4 min/max) — no data collect. `knn_join` reads
+    the same numbers from its occupancy histogram instead."""
+    st = points.agg(F.count("*").alias("n"),
+                    F.min(lon).alias("x0"), F.max(lon).alias("x1"),
+                    F.min(lat).alias("y0"), F.max(lat).alias("y1")).first()
+    return _res_for(st["n"] or 0, st["x0"], st["x1"], st["y0"], st["y1"], k, rings,
+                    lo=lo, hi=hi, target_factor=target_factor)
+
+
+def _occupancy(queries: DataFrame, points: DataFrame, q_lon: str, q_lat: str,
+               p_lon: str, p_lat: str) -> pd.DataFrame:
+    """The one driver action: per (side, level-8 cell) the row count and
+    lon/lat min/max, side 0 = points, 1 = queries, as a pandas frame
+    (≤ 2 · 65,536 rows). Rows with a null coordinate are left out."""
+    def side(df, s, lon, lat):
+        x, y = cellindex.sql_cell_xy(lon, lat, _HIST_RES)
+        return df.where(f"{lon} IS NOT NULL AND {lat} IS NOT NULL").selectExpr(
+            f"{s} AS side", f"{x} AS x", f"{y} AS y",
+            f"cast({lon} as double) AS lon", f"cast({lat} as double) AS lat")
+
+    return (side(points, 0, p_lon, p_lat)
+            .unionByName(side(queries, 1, q_lon, q_lat))
+            .groupBy("side", "x", "y")
+            .agg(F.expr("count(1) AS n"), F.expr("min(lon) AS x0"),
+                 F.expr("max(lon) AS x1"), F.expr("min(lat) AS y0"),
+                 F.expr("max(lat) AS y1"))
+            .toPandas())
+
+
+def _cell_radii(pts: pd.DataFrame, qx: np.ndarray, qy: np.ndarray, k: int, h: int,
+                min_cell: float) -> np.ndarray:
+    """Certified ring radius (in cells of size `min_cell`) for each query
+    cell (qx, qy) at level h; needs Σ pts.n ≥ k. The least block
+    half-width `a` holding ≥ k points comes from a summed-area table by a
+    vectorized binary search (the block count only grows with `a`, and at
+    a = 2^h - 1 the block is the whole grid)."""
+    m = 1 << h
+    s = _HIST_RES - h
+    grid = np.zeros((m, m), np.int64)
+    np.add.at(grid, (pts["x"].to_numpy() >> s, pts["y"].to_numpy() >> s),
+              pts["n"].to_numpy())
+    sat = np.zeros((m + 1, m + 1), np.int64)
+    sat[1:, 1:] = grid.cumsum(0).cumsum(1)
+
+    def block(a):
+        x0, x1 = np.maximum(qx - a, 0), np.minimum(qx + a, m - 1) + 1
+        y0, y1 = np.maximum(qy - a, 0), np.minimum(qy + a, m - 1) + 1
+        return sat[x1, y1] - sat[x0, y1] - sat[x1, y0] + sat[x0, y0]
+
+    lo, hi = np.zeros_like(qx), np.full_like(qx, m - 1)
+    while (lo < hi).any():
+        mid = (lo + hi) // 2
+        ok = block(mid) >= k
+        lo, hi = np.where(ok, lo, mid + 1), np.where(ok, mid, hi)
+    d = (lo + 1) * math.hypot(*cell_deg(h))
+    return (np.floor(d / min_cell) + 1).astype(np.int64)
+
+
+_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
+          "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40}
+# an upper bound on one broadcast point row: four fixed-width fields in an
+# UnsafeRow (40 B) plus its long-keyed hash-map entry
+_POINT_ROW_BYTES = 64
+
+
+def _fits_broadcast(spark, id_type: T.DataType, n_rows: int) -> bool:
+    """Whether the point table (exactly `n_rows`) stays under Spark's
+    broadcast-join threshold; only fixed-width ids have a known row size."""
+    m = re.fullmatch(r"(-?\d+)([a-z]*)",
+                     spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower())
+    limit = int(m[1]) * _UNITS[m[2]]
+    fixed = isinstance(id_type, (T.IntegralType, T.FractionalType)) and \
+        not isinstance(id_type, T.DecimalType)
+    return fixed and n_rows * _POINT_ROW_BYTES <= limit
+
+
+def _ring_cell(res: int, rings: str, q_lon: str, q_lat: str) -> tuple[str, str]:
+    """SQL for a query's ring block at `res`: (index of its last cell, id
+    of cell `__i`). `rings` may name a per-row column. A cell beyond a
+    pole, and any `__i < 0`, get a null id, which joins nothing."""
     n = 1 << res
-    qx, qy, _ = cellindex.spark_cell_cols(F.col(q_lon), F.col(q_lat), res)
-    qq = (q.withColumn("qcx", qx).withColumn("qcy", qy)
-          .withColumn("__r", rings_col.cast("int"))
-          .withColumn("dx", F.explode(F.sequence(-F.col("__r"), F.col("__r"))))
-          .withColumn("dy", F.explode(F.sequence(-F.col("__r"), F.col("__r"))))
-          .withColumn("cell_x", F.pmod(F.col("qcx") + F.col("dx"), F.lit(n)).cast("long"))
-          .withColumn("cell_y", (F.col("qcy") + F.col("dy")).cast("long"))
-          .filter((F.col("cell_y") >= 0) & (F.col("cell_y") < n))
-          .withColumn("cell", _cell_col(res))
-          .drop("dx", "dy", "qcx", "qcy", "cell_x", "cell_y", "__r"))
-    return qq.join(p, "cell").withColumn(
-        "dist",
-        F.sqrt(F.pow(F.col(q_lon) - F.col("__plon"), 2)
-               + F.pow(F.col(q_lat) - F.col("__plat"), 2))).drop("cell")
+    x, y = cellindex.sql_cell_xy(q_lon, q_lat, res)
+    side = f"(2 * {rings} + 1)"
+    cx = f"pmod({x} + __i div {side} - {rings}, {n})"
+    cy = f"({y} + __i % {side} - {rings})"
+    return (f"{side} * {side} - 1",
+            f"CASE WHEN __i >= 0 AND {cy} BETWEEN 0 AND {n - 1} "
+            f"THEN {res << _RSHIFT}L + {cx} * {1 << _XSHIFT} + {cy} END")
 
 
-def _rank_topk(cand: DataFrame, k: int, q_id: str) -> DataFrame:
-    w = Window.partitionBy(q_id).orderBy(F.col("dist").asc(), F.col("__pid").asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+def _ring_candidates(q: DataFrame, cols: list[str], p: DataFrame, res: int, rings: str,
+                     q_lon: str, q_lat: str, keep: str = "true",
+                     marker: bool = False) -> DataFrame:
+    """Explode q to its ring cells, join on cell, compute distance, keep
+    rows where `keep` holds. Returns `cols` of q plus __pid, __plon,
+    __plat, dist; p must carry (cell, __pid, __plon, __plat). With
+    `marker`, every query also keeps one row with null point columns, so
+    it reaches the top-k window even with no candidate."""
+    last, cell = _ring_cell(res, rings, q_lon, q_lat)
+    return (q.selectExpr("*", f"explode(sequence({-int(marker)}, {last})) AS __i")
+            .selectExpr(*cols, "__i", f"{cell} AS cell")
+            .join(p, "cell", "left" if marker else "inner")
+            .selectExpr(*cols, "__i", "__pid", "__plon", "__plat",
+                        f"{_DIST.format(lon=q_lon, lat=q_lat)} AS dist")
+            .where(f"{keep} OR __i < 0"))
 
 
-def _finalize(ranked: DataFrame, complete_col) -> DataFrame:
-    return (ranked.withColumn("complete", complete_col)
-            .withColumnRenamed("__pid", "neighbor_id")
-            .withColumnRenamed("__plon", "neighbor_lon")
-            .withColumnRenamed("__plat", "neighbor_lat"))
+def _rank_topk(cand: DataFrame, k: int, q_id: str, cols: list[str]) -> DataFrame:
+    """The output rows: top-k per query by (dist, __pid), marker rows last,
+    with `complete` = the query had ≥ k candidates (same window
+    partitioning: no extra exchange)."""
+    return cand.selectExpr(
+        *cols, "__pid AS neighbor_id", "__plon AS neighbor_lon", "__plat AS neighbor_lat",
+        "dist", f"row_number() OVER (PARTITION BY {q_id} "
+                "ORDER BY dist ASC NULLS LAST, __pid) AS rank",
+        f"count(__pid) OVER (PARTITION BY {q_id}) >= {k} AS complete").where(f"rank <= {k}")
 
 
 def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
@@ -124,128 +232,146 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     columns, neighbor_id/neighbor_lon/neighbor_lat, dist, rank (1-based),
     and `complete`.
 
-    guarantee=True (default): results are the EXACT top-k — candidates
-    beyond the certification bound (rings·min cell size) are pruned
-    before the top-k sort, and queries left with fewer than k certified
-    candidates are re-probed at doubling radii (exact at every step),
-    falling back to a cross-join brute pass for the (pathological)
-    remainder; `complete` is then simply `found == k` (false only when
-    k > |P|).
+    guarantee=True (default): results are the EXACT top-k, from one
+    driver action (the occupancy histogram) and one lazy plan: the ring
+    pass at `rings` certifies the dense queries; the rest re-run once at
+    their cell's histogram-certified radius; a cross-join brute tier
+    joins the plan only when the histogram shows it is needed (k > |P|,
+    or a query cell whose radius exceeds `max_reprobe_rings`).
+    `complete` is `found == k`, false only when k > |P|. Empty points or
+    empty queries give an empty frame.
 
     guarantee=False: single ring pass; `complete` certifies the bound
     (found ≥ k AND kth dist < rings·min(cell_w, cell_h)) — a false flag
     means the top-k may be missing a true neighbor just outside the ring
     block. Round 1 shipped complete = found ≥ k, which wrongly certified
-    results whose true k-th neighbor sat outside the scanned block.
+    results whose true k-th neighbor sat outside the scanned block. With
+    an explicit `res` this mode runs no action before it returns.
 
-    Deterministic: ties broken by (dist, p_id).
+    Raises ValueError for k < 1 or rings < 0. Deterministic: ties broken
+    by (dist, p_id).
     """
-    if res is None:
-        res = auto_res(points, k, rings, lon=p_lon, lat=p_lat)
+    if k < 1:
+        raise ValueError(f"knn_join: k must be >= 1, got {k}")
+    if rings < 0:
+        raise ValueError(f"knn_join: rings must be >= 0, got {rings}")
+    qid, qlon, qlat = (f"`{c}`" for c in (q_id, q_lon, q_lat))
+    plon, plat = f"`{p_lon}`", f"`{p_lat}`"
+
+    cols = [f"`{c}`" for c in queries.columns]
+    n_pts = None
+    if guarantee or res is None:
+        occ = _occupancy(queries, points, qlon, qlat, plon, plat)
+        pts, qcells = occ[occ["side"] == 0], occ[occ["side"] == 1]
+        n_pts = int(pts["n"].sum())
+        if res is None:
+            res = _res_for(n_pts, pts["x0"].min(), pts["x1"].max(),
+                           pts["y0"].min(), pts["y1"].max(), k, rings)
     n = 1 << res
-    cw, ch = cell_deg(res)
-    min_cell = min(cw, ch)
+    min_cell = min(cell_deg(res))
     bound = rings * min_cell
 
-    # the driver tables read as ONE split (guide §2.2) — without this the
-    # whole ring pass (explode x broadcast join x top-k sort) ran as a
-    # single task (measured 5.2 s of a 5.5 s knn wall in one task at
-    # sf1.0); no-op when the query side already has enough splits
-    from godal_spark.plans.skew import spread_small_scan
-
-    queries = spread_small_scan(queries)
-
-    px, py, pcell = cellindex.spark_cell_cols(F.col(p_lon), F.col(p_lat), res)
-    p = points.withColumn("cell", pcell).select(
-        "cell", F.col(p_id).alias("__pid"),
-        F.col(p_lon).alias("__plon"), F.col(p_lat).alias("__plat"))
-    if broadcast_points:
+    p = points.selectExpr(
+        f"`{p_id}` AS __pid", f"{plon} AS __plon", f"{plat} AS __plat",
+        f"{cellindex.sql_cell_expr(plon, plat, res)} AS cell",
+    ).where("__plon IS NOT NULL AND __plat IS NOT NULL")
+    spark = queries.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    if broadcast_points or (n_pts is not None and
+                            _fits_broadcast(spark, p.schema["__pid"].dataType, n_pts)):
+        # with the points broadcast, queries hash-partitioned by id up front
+        # keep that partitioning through explode and joins, so no window of
+        # the plan needs an exchange of its own
         p = F.broadcast(p)
+        queries = queries.repartition(par, q_id)
+    else:
+        # the driver tables read as ONE split (guide §2.2) — without this the
+        # whole ring pass (explode x join x top-k sort) ran as a single task
+        # (measured 5.2 s of a 5.5 s knn wall in one task at sf1.0); no-op
+        # when the query side already has enough splits
+        from godal_spark.plans.skew import spread_small_scan
 
-    cand = _ring_candidates(queries, p, res, F.lit(rings), q_id, q_lon, q_lat)
-    # ring cells are distinct, EXCEPT when the ring span wraps the whole
-    # longitude range (2*rings+1 >= 2^res): then the pmod wrap aliases
-    # cells and the same point appears twice for one query — dedup
-    if 2 * rings + 1 >= n:
-        cand = cand.dropDuplicates([q_id, "__pid"])
+        queries = spread_small_scan(queries)
+
+    def ring(q: DataFrame, qcols: list[str], keep: str = "true", marker: bool = False):
+        cand = _ring_candidates(q, qcols, p, res, str(rings), qlon, qlat, keep, marker)
+        # ring cells are distinct, EXCEPT when the ring span wraps the whole
+        # longitude range (2*rings+1 >= 2^res): then the pmod wrap aliases
+        # cells and the same point appears twice for one query — dedup
+        if 2 * rings + 1 >= n:
+            cand = cand.dropDuplicates([q_id, "__pid"])
+        return _rank_topk(cand, k, qid, qcols)
 
     if not guarantee:
-        ranked = _rank_topk(cand, k, q_id)
-        stats = ranked.groupBy(q_id).agg(F.max("rank").alias("__found"),
-                                         F.max("dist").alias("__kth"))
-        ok = (F.col("__found") >= k) & (F.col("__kth") < bound)
-        out = ranked.join(stats, q_id).withColumn("complete", ok)
-        return out.drop("__found", "__kth") \
-                  .withColumnRenamed("__pid", "neighbor_id") \
-                  .withColumnRenamed("__plon", "neighbor_lon") \
-                  .withColumnRenamed("__plat", "neighbor_lat")
+        out = [*cols, "neighbor_id", "neighbor_lon", "neighbor_lat", "dist", "rank"]
+        return ring(queries, cols).selectExpr(
+            *out, f"complete AND max(dist) OVER (PARTITION BY {qid}) < {_lit(bound)} "
+                  "AS complete")
 
     # ---- guaranteed path --------------------------------------------------
     # EXACT prefilter (guide §2.3 — sort/shuffle fewer rows): a candidate at
-    # dist >= bound can never be part of a CERTIFIED top-k (certification
-    # requires kth < bound), so drop it before the top-k sort. If a query
-    # keeps >= k candidates, its filtered top-k IS the exact global top-k
-    # (at least k candidates sit below `bound`, and every point outside the
-    # ring block is >= bound away); queries left with < k candidates are
-    # re-probed below at doubling radii, each pass certified the same way.
-    cand = cand.filter(F.col("dist") < bound)
-    # the certification check below is an ACTION; without materialization
-    # the ring pass would run once for the check and again for the
-    # caller's action. `ranked` is result-sized (≤ |Q|·k rows).
-    ranked = _rank_topk(cand, k, q_id).localCheckpoint(eager=True)
-    stats = ranked.groupBy(q_id).agg(F.count("*").alias("__found"))
-    good_ids = stats.filter(F.col("__found") >= k).select(q_id)
-    # bad = fewer than k in-bound candidates (incl. zero -> absent here)
-    qcols = queries.columns
-    remaining = queries.join(good_ids, q_id, "left_anti").select(*qcols)
-    # isEmpty (limit-1 short-circuit), not count(): the dense-corpus fast
-    # path only needs the boolean and stops at the first surviving row
-    has_bad = not remaining.isEmpty()
-    if not has_bad:
-        return _finalize(ranked, F.lit(True))
+    # dist >= bound can never be part of a CERTIFIED top-k, so drop it
+    # before the top-k sort. A query that keeps >= k candidates has its
+    # exact global top-k (every point outside the ring block is >= bound
+    # away); `complete` marks exactly those.
+    in_bound = f"dist < {_lit(bound)}"
+    h = min(res, _HIST_RES)
+    n_q = int(qcells["n"].sum())
+    if n_pts == 0 or n_q == 0:
+        log.info("knn_join: |P|=%d |Q|=%d res=%d h=%d: empty result", n_pts, n_q, res, h)
+        return ring(queries, cols, in_bound).limit(0)
 
-    parts = [_finalize(ranked.join(good_ids, q_id, "left_semi"), F.lit(True))]
+    def brute(q_side: DataFrame, p_side: DataFrame) -> DataFrame:
+        """Exact cross join + window for the queries no radius certifies."""
+        return _rank_topk(q_side.crossJoin(p_side).selectExpr(
+            *cols, "__pid", "__plon", "__plat", f"{_DIST.format(lon=qlon, lat=qlat)} AS dist"),
+            k, qid, cols)
 
-    # tier 2: doubling-radius re-probe. Radius r certifies any query that
-    # finds >= k candidates at dist < r·min_cell (every point outside the
-    # (2r+1)² block is >= r·min_cell away), so each pass is exact for the
-    # queries it resolves; the rest widen again. Replaces the old
-    # kth-derived single re-probe: with the prefilter above a bad query
-    # has no observed kth to derive a radius from, and geometric doubling
-    # reaches the same cap in <= log2(max_reprobe_rings) passes — each
-    # over a strictly shrinking query set.
-    r = 2 * rings
-    while has_bad and r <= max_reprobe_rings:
-        rbound = r * min_cell
-        rcand = _ring_candidates(remaining, p, res, F.lit(r), q_id, q_lon, q_lat)
-        # per-query rings may wrap the grid — always dedup this (small) tier
-        rcand = rcand.dropDuplicates([q_id, "__pid"]) \
-                     .filter(F.col("dist") < F.lit(rbound))
-        rranked = _rank_topk(rcand, k, q_id).localCheckpoint(eager=True)
-        rgood = (rranked.groupBy(q_id).agg(F.count("*").alias("__rf"))
-                 .filter(F.col("__rf") >= k).select(q_id))
-        parts.append(_finalize(
-            rranked.join(rgood, q_id, "left_semi"), F.lit(True)))
-        remaining = remaining.join(rgood, q_id, "left_anti")
-        has_bad = not remaining.isEmpty()
-        r *= 2
+    if n_pts < k:
+        log.info("knn_join: |P|=%d |Q|=%d res=%d h=%d: k=%d > |P|, brute tier only",
+                 n_pts, n_q, res, h, k)
+        return brute(queries, F.broadcast(p))
 
-    if has_bad:
-        # tier 3: brute — exact cross join for the pathological remainder
-        # (a query with < k neighbors inside the re-probe cap, or k > |P|)
-        pb = points.select(F.col(p_id).alias("__pid"),
-                           F.col(p_lon).alias("__plon"), F.col(p_lat).alias("__plat"))
-        bcand = (F.broadcast(remaining).crossJoin(pb)
-                 .withColumn("dist",
-                             F.sqrt(F.pow(F.col(q_lon) - F.col("__plon"), 2)
-                                    + F.pow(F.col(q_lat) - F.col("__plat"), 2))))
-        branked = _rank_topk(bcand, k, q_id)
-        bstats = branked.groupBy(q_id).agg(F.max("rank").alias("__bf"))
-        parts.append(_finalize(
-            branked.join(bstats, q_id).withColumn("c", F.col("__bf") >= k)
-            .drop("__bf"), F.col("c")).drop("c"))
+    s = _HIST_RES - h
+    key = np.unique((qcells["x"].to_numpy() >> s) << h | (qcells["y"].to_numpy() >> s))
+    qx, qy = key >> h, key & ((1 << h) - 1)
+    radius = _cell_radii(pts, qx, qy, k, h, min_cell)
+    r_max = int(radius.max())
+    over_rings = int((radius > rings).sum())
+    with_brute = r_max > max_reprobe_rings
+    log.info("knn_join: |P|=%d |Q|=%d res=%d h=%d max_radius=%d cells_over_rings=%d "
+             "brute=%s", n_pts, n_q, res, h, r_max, over_rings, with_brute)
+    if not over_rings:
+        # every query's k-th neighbor is certified < bound: ring pass only
+        return ring(queries, cols, in_bound)
 
-    out = parts[0]
-    for extra in parts[1:]:
-        out = out.unionByName(extra)
+    # Each query carries its cell's certified radius __rq through the ring
+    # pass. Its marker row brings a query the ring pass cannot certify out
+    # of the top-k window (rank 1 of an incomplete query); the next explode
+    # passes certified rows through and expands each such query to its
+    # radius block, and a second window ranks both, in the same partitions.
+    radii = spark.createDataFrame(
+        pd.DataFrame({"__hx": qx, "__hy": qy, "__rq": radius}),
+        "__hx long, __hy long, __rq long")
+    hx, hy = cellindex.sql_cell_xy(qlon, qlat, h)
+    ranked = ring(queries.join(F.broadcast(radii), F.expr(f"__hx = {hx} AND __hy = {hy}")),
+                  [*cols, "__rq"], in_bound, marker=True).where("complete OR rank = 1")
+    expand = f"NOT complete AND __rq <= {max_reprobe_rings}"
+    last, cell = _ring_cell(res, "__rq", qlon, qlat)
+    dist = _DIST.format(lon=qlon, lat=qlat)
+    cand = (ranked.selectExpr("*", f"explode(sequence(-1, IF({expand}, {last}, -1))) AS __i")
+            .selectExpr("*", f"{cell} AS cell")
+            .join(p, "cell", "left")
+            .selectExpr(*cols, "IF(complete, neighbor_id, __pid) AS __pid",
+                        "IF(complete, neighbor_lon, __plon) AS __plon",
+                        "IF(complete, neighbor_lat, __plat) AS __plat",
+                        f"IF(complete, dist, {dist}) AS dist",
+                        f"complete OR {dist} < __rq * {_lit(min_cell)} AS __keep")
+            .where("__keep"))
+    if 2 * min(r_max, max_reprobe_rings) + 1 >= n:
+        cand = cand.dropDuplicates([q_id, "__pid"])
+    out = _rank_topk(cand, k, qid, cols)
+    if with_brute:
+        rest = ranked.where(f"NOT complete AND __rq > {max_reprobe_rings}")
+        out = out.unionByName(brute(F.broadcast(rest), p))
     return out

@@ -1,5 +1,10 @@
 """PIP join, kNN join, spatial filter, skew salting, checkpoint/resume."""
 
+import contextlib
+import logging
+import signal
+import zlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -145,6 +150,138 @@ def test_knn_incomplete_flag(spark):
     pdf = spark.createDataFrame(pd.DataFrame({"pid": [0], "lon": [0.1], "lat": [0.1]}))
     out = knn.knn_join(qdf, pdf, k=5, q_id="qid", p_id="pid", res=6, rings=1).collect()
     assert len(out) == 1 and not out[0].complete
+
+
+@contextlib.contextmanager
+def _deadline(seconds: int):
+    """Fail the block with TimeoutError after `seconds` (main thread only)."""
+    def expire(*_):
+        raise TimeoutError(f"did not finish within {seconds} s")
+
+    old = signal.signal(signal.SIGALRM, expire)
+    signal.alarm(seconds)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+
+def _xy_df(spark, name, xy):
+    return spark.createDataFrame(
+        pd.DataFrame({name: np.arange(len(xy), dtype=np.int64),
+                      "lon": xy[:, 0], "lat": xy[:, 1]}),
+        f"{name} long, lon double, lat double")
+
+
+def _assert_exact_knn(out, qs, ps, k):
+    """Rows equal the numpy (dist, id)-ordered top-k of every query, and
+    `complete` is k <= |P|."""
+    got = {}
+    for r in out:
+        got.setdefault(r.qid, []).append((r.rank, r.neighbor_id, r.dist, r.complete))
+    assert sorted(got) == list(range(len(qs)))
+    for qid, (qx, qy) in enumerate(qs):
+        d = np.sqrt((qx - ps[:, 0]) ** 2 + (qy - ps[:, 1]) ** 2)
+        want = np.lexsort((np.arange(len(ps)), d))[:k]
+        mine = sorted(got[qid])
+        assert [m[0] for m in mine] == list(range(1, len(want) + 1)), f"q{qid}"
+        assert [m[1] for m in mine] == want.tolist(), f"q{qid}"
+        np.testing.assert_allclose([m[2] for m in mine], d[want], rtol=1e-12)
+        assert all(m[3] == (len(ps) >= k) for m in mine), f"q{qid}"
+
+
+def _cluster(rng, n, x0, y0, w, h):
+    return np.c_[rng.uniform(x0, x0 + w, n), rng.uniform(y0, y0 + h, n)]
+
+
+def _knn_case(name):
+    rng = np.random.default_rng(zlib.crc32(name.encode()))
+    ps = _cluster(rng, 150, 0, 40, 3, 3)
+    qs = _cluster(rng, 12, 0, 40, 3, 3)
+    if name == "far":
+        # queries far from every point: their histogram radius passes
+        # max_reprobe_rings, so the brute tier joins the radius pass
+        qs = np.r_[qs, [[120.0, -60.0], [-150.0, 10.0], [2.0, -80.0], [60.0, 80.0]]]
+        return qs, ps, 3, {"res": None}
+    if name == "antimeridian":
+        ps = np.r_[_cluster(rng, 60, 179.0, -1, 0.99, 2), _cluster(rng, 60, -179.99, -1, 0.99, 2)]
+        qs = np.array([[179.9, 0.0], [-179.9, 0.0], [179.9, 0.9], [-179.9, -0.9]])
+        return qs, ps, 4, {"res": None}
+    if name == "poles":
+        ps = np.r_[_cluster(rng, 60, -10, 88, 20, 2), _cluster(rng, 60, -10, -90, 20, 2)]
+        qs = np.array([[0.0, 89.9], [5.0, -89.9], [-9.0, 89.9], [0.0, 0.0]])
+        return qs, ps, 4, {"res": None}
+    if name in ("res10", "res12"):
+        # above the histogram level, with sparse outliers the ring pass misses
+        ps = np.r_[ps, _cluster(rng, 10, -20, 20, 40, 40)]
+        qs = np.r_[qs, _cluster(rng, 4, -20, 20, 40, 40)]
+        return qs, ps, 3, {"res": int(name[3:]), "rings": 1}
+    if name == "k_gt_p":
+        return qs, ps[:4], 6, {"res": 6}
+    if name == "ties":
+        # a 0.5-degree lattice; queries on lattice points and cell centres
+        # have 4 or 5 equidistant neighbors, broken by id
+        g = np.arange(0.0, 3.01, 0.5)
+        ps = np.array([(x, 40.0 + y) for x in g for y in g])
+        qs = np.array([[1.0, 41.0], [1.25, 41.25], [0.0, 40.0], [2.75, 42.75]])
+        return qs, ps, 3, {"res": 7, "rings": 1}
+    raise AssertionError(name)
+
+
+@pytest.mark.parametrize("case", ["far", "antimeridian", "poles", "res10", "res12",
+                                  "k_gt_p", "ties"])
+def test_knn_exact_sweep(spark, case):
+    """Exact (dist, id) top-k against numpy brute force across the tiers:
+    histogram radius, the brute tier, wrap/pole edges, res above the
+    histogram level, k > |P| and equal distances."""
+    qs, ps, k, kw = _knn_case(case)
+    out = knn.knn_join(_xy_df(spark, "qid", qs), _xy_df(spark, "pid", ps), k,
+                       q_id="qid", p_id="pid", **kw).collect()
+    _assert_exact_knn(out, qs, ps, k)
+
+
+def test_knn_degenerate_inputs(spark):
+    rng = np.random.default_rng(5)
+    qs, ps = _cluster(rng, 8, 0, 40, 3, 3), _cluster(rng, 80, 0, 40, 3, 3)
+    qdf, pdf = _xy_df(spark, "qid", qs), _xy_df(spark, "pid", ps)
+    for bad in ({"k": 0}, {"k": -2}, {"k": 3, "rings": -1}):
+        with pytest.raises(ValueError):
+            knn.knn_join(qdf, pdf, q_id="qid", p_id="pid", **bad)
+    # rings=0 used to spin forever in the doubling re-probe loop
+    with _deadline(120):
+        out = knn.knn_join(qdf, pdf, 3, q_id="qid", p_id="pid", res=6, rings=0).collect()
+    _assert_exact_knn(out, qs, ps, 3)
+    with _deadline(120):
+        assert knn.knn_join(qdf, pdf.limit(0), 3, q_id="qid", p_id="pid").collect() == []
+        assert knn.knn_join(qdf.limit(0), pdf, 3, q_id="qid", p_id="pid").collect() == []
+
+
+def test_knn_join_one_action_before_return(spark, caplog):
+    """knn_join runs only its occupancy-histogram collect before it
+    returns; everything else is one lazy plan. Adaptive execution runs
+    the aggregate's shuffle map stage as a job of its own, so one action
+    is at most two jobs (the doubling loop ran a dozen or more). The
+    runtime choice is logged on one line."""
+    caplog.set_level(logging.INFO, logger="godal_spark.operators.knn")
+    rng = np.random.default_rng(9)
+    qs = np.r_[_cluster(rng, 20, 0, 40, 3, 3), [[40.0, 0.0]]]
+    ps = _cluster(rng, 300, 0, 40, 3, 3)
+    qdf, pdf = _xy_df(spark, "qid", qs), _xy_df(spark, "pid", ps)
+    sc = spark.sparkContext
+    group = "test_knn_one_action"
+    sc.setJobGroup(group, group, False)
+    try:
+        out = knn.knn_join(qdf, pdf, 4, q_id="qid", p_id="pid", res=None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert 1 <= len(jobs) <= 2, jobs
+    (line,) = [r.getMessage() for r in caplog.records if r.name == knn.__name__]
+    for field in ("|P|=300", "|Q|=21", "res=", "h=8", "max_radius=", "cells_over_rings=",
+                  "brute=True"):
+        assert field in line, line
+    _assert_exact_knn(out.collect(), qs, ps, 4)
 
 
 def test_spatial_filter_golden(spark):
