@@ -285,11 +285,11 @@ def q_knn(spark, sf_dir):
 
 def q_knn_fine(spark, sf_dir):
     """kNN at res 9 (0.70° cells) where a bare rings=1 pass WOULD drop
-    true neighbors — the distance-bound guarantee (the radius pass at
-    each query cell's occupancy-certified radius, and the brute tier
-    where the histogram calls for it; knn.py) makes the result exact
-    anyway. Res 9 is above the histogram's level 8. Same brute-force
-    oracle as q_knn."""
+    true neighbors — the distance-bound guarantee (re-probe passes at
+    doubling radii capped by each query cell's occupancy-certified
+    radius, since res 9 is above the histogram's level 8, and the brute
+    tier where the histogram calls for it; knn.py) makes the result
+    exact anyway. Same brute-force oracle as q_knn."""
     q = _supplier_points(spark, sf_dir)
     p = _customer_points(spark, sf_dir)
     out = knn_op.knn_join(q, p, k=3, q_id="qid", p_id="pid",

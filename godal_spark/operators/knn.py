@@ -24,21 +24,26 @@ One driver action, then one lazy plan. The guaranteed path:
      dist ≥ that bound are dropped BEFORE the top-k sort (they can never
      certify — guide §2.3, sort fewer rows), and a query that keeps ≥ k
      is exact.
-  2. radius pass — each query carries its cell's certified radius
+  2. re-probe passes — each query carries its cell's certified radius
      through the ring pass, where a marker row (null point, ranked last)
-     keeps every query in the top-k window. An uncertified query's rank-1
-     row is then exploded to its radius block while certified rows pass
-     through, and a second top-k window ranks both: no anti-join, and in
-     the plan only when some query cell needs more than `rings`.
+     keeps every query in the top-k window. A pass expands each
+     uncertified query's rank-1 row to its radius block while certified
+     rows pass through, and a second top-k window ranks both: no
+     anti-join. At res ≤ 8 one pass at the certified radius suffices.
+     Above it a level-8 radius is loose by up to 2^(res-8) ring cells, so
+     the passes double from 2·rings, each capped at the query's radius:
+     a query stops expanding at the first radius that certifies it.
   3. brute — exact cross-join + window pass, unioned in only where the
      histogram says it is needed: k > |P| (then it is the whole plan), or
-     a query cell whose radius exceeds `max_reprobe_rings`.
+     a query cell whose radius exceeds `max_reprobe_rings`. The last
+     re-probe pass runs at that cap, so the tier only sees queries whose
+     k-th neighbor is ≥ max_reprobe_rings·min_cell away.
 
 No checkpoint and no emptiness probe, and the runtime choice is logged on
-one line. When the exact |P| fits Spark's broadcast-join threshold, the
-points are broadcast and the queries hash-partitioned by id before the
-explode, so the tiers run in one stage after that shuffle: no top-k
-window needs an exchange of its own.
+one line. The queries are hash-partitioned by id before the explode; when
+the points are broadcast (`broadcast_points`, or Spark's own size choice)
+the tiers run in one stage after that shuffle: no top-k window needs an
+exchange of its own.
 
 The ring join's cost is (2R+1)² × |Q| candidate rows BEFORE the join —
 explicit and tunable, unlike a cross join's |Q|×|P|. Euclidean degree
@@ -56,11 +61,10 @@ from __future__ import annotations
 
 import logging
 import math
-import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from godal_spark.functions import cellindex
 
@@ -162,24 +166,6 @@ def _cell_radii(pts: pd.DataFrame, qx: np.ndarray, qy: np.ndarray, k: int, h: in
     return (np.floor(d / min_cell) + 1).astype(np.int64)
 
 
-_UNITS = {"": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
-          "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40}
-# an upper bound on one broadcast point row: four fixed-width fields in an
-# UnsafeRow (40 B) plus its long-keyed hash-map entry
-_POINT_ROW_BYTES = 64
-
-
-def _fits_broadcast(spark, id_type: T.DataType, n_rows: int) -> bool:
-    """Whether the point table (exactly `n_rows`) stays under Spark's
-    broadcast-join threshold; only fixed-width ids have a known row size."""
-    m = re.fullmatch(r"(-?\d+)([a-z]*)",
-                     spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower())
-    limit = int(m[1]) * _UNITS[m[2]]
-    fixed = isinstance(id_type, (T.IntegralType, T.FractionalType)) and \
-        not isinstance(id_type, T.DecimalType)
-    return fixed and n_rows * _POINT_ROW_BYTES <= limit
-
-
 def _ring_cell(res: int, rings: str, q_lon: str, q_lat: str) -> tuple[str, str]:
     """SQL for a query's ring block at `res`: (index of its last cell, id
     of cell `__i`). `rings` may name a per-row column. A cell beyond a
@@ -222,6 +208,50 @@ def _rank_topk(cand: DataFrame, k: int, q_id: str, cols: list[str]) -> DataFrame
         f"count(__pid) OVER (PARTITION BY {q_id}) >= {k} AS complete").where(f"rank <= {k}")
 
 
+def _steps(rings: int, cap: int, doubling: bool) -> list[int]:
+    """Ring radii of the re-probe passes after the `rings` pass: `cap`
+    alone, or with `doubling` first 2·rings, 4·rings, … below it. None
+    when `cap` ≤ rings (the rings pass certifies every query)."""
+    steps, r = [], max(1, 2 * rings)
+    while doubling and r < cap:
+        steps.append(r)
+        r *= 2
+    return steps + [cap] if cap > rings else steps
+
+
+def _reprobe(ranked: DataFrame, p: DataFrame, r: int, res: int, min_cell: float, k: int,
+             q_id: str, qid: str, qlon: str, qlat: str, cols: list[str]) -> DataFrame:
+    """One re-probe pass, in the partitions of `ranked` (top-k rows with
+    `cols` ∋ __rq): an incomplete query's rank-1 row expands to
+    least(r, __rq) rings plus its marker row, complete rows pass through,
+    and a top-k window ranks both. At radius __rq the histogram certifies
+    ≥ k points in bound, so those queries come out complete."""
+    rq = f"least({r}, __rq)"
+    last, cell = _ring_cell(res, rq, qlon, qlat)
+    dist = _DIST.format(lon=qlon, lat=qlat)
+    cand = (ranked.where("complete OR rank = 1")
+            .selectExpr("*", f"explode(sequence(-1, IF(complete, -1, {last}))) AS __i")
+            .selectExpr("*", f"{cell} AS cell")
+            .join(p, "cell", "left")
+            .selectExpr(*cols, "IF(complete, neighbor_id, __pid) AS __pid",
+                        "IF(complete, neighbor_lon, __plon) AS __plon",
+                        "IF(complete, neighbor_lat, __plat) AS __plat",
+                        f"IF(complete, dist, {dist}) AS dist",
+                        f"complete OR __i < 0 OR {dist} < {rq} * {_lit(min_cell)} AS __keep")
+            .where("__keep"))
+    if 2 * r + 1 >= 1 << res:
+        cand = cand.dropDuplicates([q_id, "__pid"])
+    return _rank_topk(cand, k, qid, cols)
+
+
+def _brute(q_side: DataFrame, p_side: DataFrame, k: int, qid: str, qlon: str, qlat: str,
+           cols: list[str]) -> DataFrame:
+    """Exact cross join + top-k window, for the queries no radius certifies."""
+    return _rank_topk(q_side.crossJoin(p_side).selectExpr(
+        *cols, "__pid", "__plon", "__plat", f"{_DIST.format(lon=qlon, lat=qlat)} AS dist"),
+        k, qid, cols)
+
+
 def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
              q_id: str, q_lon: str = "lon", q_lat: str = "lat",
              p_id: str, p_lon: str = "lon", p_lat: str = "lat",
@@ -234,10 +264,12 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
 
     guarantee=True (default): results are the EXACT top-k, from one
     driver action (the occupancy histogram) and one lazy plan: the ring
-    pass at `rings` certifies the dense queries; the rest re-run once at
-    their cell's histogram-certified radius; a cross-join brute tier
-    joins the plan only when the histogram shows it is needed (k > |P|,
-    or a query cell whose radius exceeds `max_reprobe_rings`).
+    pass at `rings` certifies the dense queries; the rest re-run at their
+    cell's histogram-certified radius (above res 8, at doubling radii
+    capped by it); a cross-join brute tier joins the plan only when the
+    histogram shows it is needed (k > |P|, or a query cell whose radius
+    exceeds `max_reprobe_rings`), and then only gets the queries no pass
+    up to `max_reprobe_rings` certified.
     `complete` is `found == k`, false only when k > |P|. Empty points or
     empty queries give an empty frame.
 
@@ -259,7 +291,6 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     plon, plat = f"`{p_lon}`", f"`{p_lat}`"
 
     cols = [f"`{c}`" for c in queries.columns]
-    n_pts = None
     if guarantee or res is None:
         occ = _occupancy(queries, points, qlon, qlat, plon, plat)
         pts, qcells = occ[occ["side"] == 0], occ[occ["side"] == 1]
@@ -275,23 +306,15 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
         f"`{p_id}` AS __pid", f"{plon} AS __plon", f"{plat} AS __plat",
         f"{cellindex.sql_cell_expr(plon, plat, res)} AS cell",
     ).where("__plon IS NOT NULL AND __plat IS NOT NULL")
-    spark = queries.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if broadcast_points or (n_pts is not None and
-                            _fits_broadcast(spark, p.schema["__pid"].dataType, n_pts)):
-        # with the points broadcast, queries hash-partitioned by id up front
-        # keep that partitioning through explode and joins, so no window of
-        # the plan needs an exchange of its own
+    if broadcast_points:
         p = F.broadcast(p)
-        queries = queries.repartition(par, q_id)
-    else:
-        # the driver tables read as ONE split (guide §2.2) — without this the
-        # whole ring pass (explode x join x top-k sort) ran as a single task
-        # (measured 5.2 s of a 5.5 s knn wall in one task at sf1.0); no-op
-        # when the query side already has enough splits
-        from godal_spark.plans.skew import spread_small_scan
-
-        queries = spread_small_scan(queries)
+    # The driver tables read as ONE split (guide §2.2): without a
+    # repartition the whole ring pass (explode x join x top-k sort) ran as
+    # a single task (measured 5.2 s of a 5.5 s knn wall in one task at
+    # sf1.0). Hash-partitioning by query id keeps through the explodes and
+    # through broadcast joins of the points (the flag, or Spark's own size
+    # choice), so then no top-k window of the plan needs its own exchange.
+    queries = queries.repartition(queries.sparkSession.sparkContext.defaultParallelism, q_id)
 
     def ring(q: DataFrame, qcols: list[str], keep: str = "true", marker: bool = False):
         cand = _ring_candidates(q, qcols, p, res, str(rings), qlon, qlat, keep, marker)
@@ -320,58 +343,46 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     if n_pts == 0 or n_q == 0:
         log.info("knn_join: |P|=%d |Q|=%d res=%d h=%d: empty result", n_pts, n_q, res, h)
         return ring(queries, cols, in_bound).limit(0)
-
-    def brute(q_side: DataFrame, p_side: DataFrame) -> DataFrame:
-        """Exact cross join + window for the queries no radius certifies."""
-        return _rank_topk(q_side.crossJoin(p_side).selectExpr(
-            *cols, "__pid", "__plon", "__plat", f"{_DIST.format(lon=qlon, lat=qlat)} AS dist"),
-            k, qid, cols)
-
     if n_pts < k:
         log.info("knn_join: |P|=%d |Q|=%d res=%d h=%d: k=%d > |P|, brute tier only",
                  n_pts, n_q, res, h, k)
-        return brute(queries, F.broadcast(p))
+        return _brute(queries, F.broadcast(p), k, qid, qlon, qlat, cols)
 
     s = _HIST_RES - h
     key = np.unique((qcells["x"].to_numpy() >> s) << h | (qcells["y"].to_numpy() >> s))
     qx, qy = key >> h, key & ((1 << h) - 1)
     radius = _cell_radii(pts, qx, qy, k, h, min_cell)
     r_max = int(radius.max())
-    over_rings = int((radius > rings).sum())
     with_brute = r_max > max_reprobe_rings
+    # Above the histogram level a radius counts whole level-h cells, each
+    # 2^(res-h) ring cells a side, so it can overshoot a query's need by
+    # that much: there the passes double from 2·rings, each capped at the
+    # query's certified radius. The last pass runs at min(r_max,
+    # max_reprobe_rings), so the brute tier only gets queries with fewer
+    # than k points within max_reprobe_rings rings.
+    steps = _steps(rings, min(r_max, max_reprobe_rings), res > h)
     log.info("knn_join: |P|=%d |Q|=%d res=%d h=%d max_radius=%d cells_over_rings=%d "
-             "brute=%s", n_pts, n_q, res, h, r_max, over_rings, with_brute)
-    if not over_rings:
-        # every query's k-th neighbor is certified < bound: ring pass only
-        return ring(queries, cols, in_bound)
+             "steps=%s brute=%s", n_pts, n_q, res, h, r_max, int((radius > rings).sum()),
+             steps, with_brute)
 
     # Each query carries its cell's certified radius __rq through the ring
-    # pass. Its marker row brings a query the ring pass cannot certify out
-    # of the top-k window (rank 1 of an incomplete query); the next explode
-    # passes certified rows through and expands each such query to its
-    # radius block, and a second window ranks both, in the same partitions.
-    radii = spark.createDataFrame(
+    # pass, where its marker row keeps it in the top-k window; each
+    # re-probe pass then expands the queries still incomplete.
+    radii = queries.sparkSession.createDataFrame(
         pd.DataFrame({"__hx": qx, "__hy": qy, "__rq": radius}),
         "__hx long, __hy long, __rq long")
     hx, hy = cellindex.sql_cell_xy(qlon, qlat, h)
+    rcols = [*cols, "__rq"]
     ranked = ring(queries.join(F.broadcast(radii), F.expr(f"__hx = {hx} AND __hy = {hy}")),
-                  [*cols, "__rq"], in_bound, marker=True).where("complete OR rank = 1")
-    expand = f"NOT complete AND __rq <= {max_reprobe_rings}"
-    last, cell = _ring_cell(res, "__rq", qlon, qlat)
-    dist = _DIST.format(lon=qlon, lat=qlat)
-    cand = (ranked.selectExpr("*", f"explode(sequence(-1, IF({expand}, {last}, -1))) AS __i")
-            .selectExpr("*", f"{cell} AS cell")
-            .join(p, "cell", "left")
-            .selectExpr(*cols, "IF(complete, neighbor_id, __pid) AS __pid",
-                        "IF(complete, neighbor_lon, __plon) AS __plon",
-                        "IF(complete, neighbor_lat, __plat) AS __plat",
-                        f"IF(complete, dist, {dist}) AS dist",
-                        f"complete OR {dist} < __rq * {_lit(min_cell)} AS __keep")
-            .where("__keep"))
-    if 2 * min(r_max, max_reprobe_rings) + 1 >= n:
-        cand = cand.dropDuplicates([q_id, "__pid"])
-    out = _rank_topk(cand, k, qid, cols)
-    if with_brute:
-        rest = ranked.where(f"NOT complete AND __rq > {max_reprobe_rings}")
-        out = out.unionByName(brute(F.broadcast(rest), p))
-    return out
+                  rcols, in_bound, marker=True)
+    for r in steps:
+        ranked = _reprobe(ranked, p, r, res, min_cell, k, q_id, qid, qlon, qlat, rcols)
+    out = [*cols, "neighbor_id", "neighbor_lon", "neighbor_lat", "dist", "rank", "complete"]
+    if not with_brute:
+        return ranked.selectExpr(*out)
+    # `ranked` feeds both sides of the union, so its passes run twice in
+    # the plan (exchange reuse shares the shuffles, not the windows); the
+    # tier is planned only when a cell's radius passes max_reprobe_rings.
+    rest = ranked.where("NOT complete AND rank = 1").selectExpr(*cols)
+    return ranked.where("complete").selectExpr(*out).unionByName(
+        _brute(F.broadcast(rest), p, k, qid, qlon, qlat, cols))

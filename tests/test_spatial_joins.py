@@ -284,6 +284,39 @@ def test_knn_join_one_action_before_return(spark, caplog):
     _assert_exact_knn(out.collect(), qs, ps, 4)
 
 
+def test_knn_reprobe_passes(spark, caplog, monkeypatch):
+    """The re-probe passes the histogram plans. Dense query cells at
+    rings=3 certify in the ring pass alone (no re-probe). At res 12 a
+    query whose level-8 cell is empty gets a coarse radius over
+    max_reprobe_rings, so the brute tier is planned, but its k-th
+    neighbor is 34 ring cells away: the doubling passes up to 64 rings
+    certify it and no row reaches the brute tier."""
+    caplog.set_level(logging.INFO, logger="godal_spark.operators.knn")
+    seen = []
+
+    def brute(q_side, *args):
+        seen.append(q_side)
+        return real_brute(q_side, *args)
+
+    real_brute = knn._brute
+    monkeypatch.setattr(knn, "_brute", brute)
+    rng = np.random.default_rng(13)
+    dense = _cluster(rng, 200, 0.1, 40.9, 2.6, 1.2)
+    cluster = _cluster(rng, 400, 10.0, 45.0, 0.5, 0.3)
+    for ps, qs, kw, want in [
+            (dense, dense[:10], {"res": 7, "rings": 3}, "steps=[] brute=False"),
+            (cluster, np.r_[cluster[:5], [[12.0, 45.1]]], {"res": 12, "rings": 2},
+             "steps=[4, 8, 16, 32, 64] brute=True")]:
+        caplog.clear()
+        out = knn.knn_join(_xy_df(spark, "qid", qs), _xy_df(spark, "pid", ps), 3,
+                           q_id="qid", p_id="pid", **kw).collect()
+        (line,) = [r.getMessage() for r in caplog.records if r.name == knn.__name__]
+        assert want in line, line
+        _assert_exact_knn(out, qs, ps, 3)
+    (rest,) = seen
+    assert rest.count() == 0
+
+
 def test_spatial_filter_golden(spark):
     # godal_test.go:2620-2634: 2 rows; point filter inside → 1 row
     fps = spark.createDataFrame(pd.DataFrame({
