@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from godal_spark.plans.skew import spread_small_scan
+
 # ---------------------------------------------------------------------------
 # exact
 # ---------------------------------------------------------------------------
@@ -134,9 +136,7 @@ def with_shingle_minhash_fused(docs: DataFrame, text_col: str = "text",
     # a single file under maxPartitionBytes) and the heavy shingle UDF
     # then runs on one core — spread it before the compute. At real
     # table scale the input already has >= cores splits and this no-ops.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    docs = spread_small_scan(docs)
 
     a, b = _minhash_params(num_hashes, seed)
     rows_per_band = (num_hashes // bands) if bands else 0
@@ -700,10 +700,7 @@ def with_winnowing_anchors(docs: DataFrame, *, k: int = 16,
                     grams.append(t[p:p + k])
             yield pd.DataFrame({"__id": ids, "pos": poss, "gram": grams})
 
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    src = docs.select(F.col(id_col), F.col(text_col))
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = spread_small_scan(docs.select(F.col(id_col), F.col(text_col)))
     return src.mapInPandas(gen, schema="__id long, pos int, gram string")
 
 

@@ -9,13 +9,13 @@ Golden contracts (godal_test.go:2175-2281, 3995-4078):
     their largest neighboring component; mask pixels preserved;
     8-connected diagonal of 10 px survives threshold 3.
 
-Distributed design: the work unit is ONE image band — tiles of an image
-gather to a single task (`groupBy(image_id, band).applyInPandas`). At
-10^12-image scale parallelism comes from image count, and a single
-image/dataset is bounded (the reference's Datasets are in-memory
-rasters), so per-image gather is the right plan; a cross-tile
-border-merge join is only needed for single rasters larger than one
-task's memory, which this engine documents as out of scope for v1.
+Distributed design: `polygonize` gathers ONE image band's tiles into a
+single task (`groupBy(image_id, band).applyInPandas`) — at 10^12-image
+scale parallelism comes from image count. For single rasters larger
+than one task, `polygonize_tiles` and `sieve_tiles` never gather: they
+share one tile-border pipeline (_label_tile per tile, _border_strips
+for its edges, _border_pairs to join components across tile borders
+in the JVM, _attach_roots for the component roots).
 
 Geometry emission: components trace to rectilinear rings (interior-left
 directed edge walk). Components whose 8-conn boundary self-touches
@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from godal_spark.functions import geom as G
+from godal_spark.plans.skew import adaptive_parallelism
 
 
 # ---------------------------------------------------------------------------
@@ -726,24 +727,128 @@ def _resolve_roots_distributed(edges: DataFrame, max_iters: int = 25) -> DataFra
     return lab
 
 
-def _declare_parallelism(df: DataFrame, *keys: str) -> DataFrame:
-    """Explicit keyed repartition before a Python-heavy applyInPandas:
-    AQE's size-based coalescing assumes IO-bound tasks and serializes
-    CPU-bound Arrow kernels (PLANS.md round-3 lesson; measured 19 s -> 3 s
-    on the overview reduce). Explicit-N repartitions are exempt from
-    coalescing and satisfy the grouping's required distribution."""
-    from pyspark.sql import functions as F  # noqa: F401
+def _label_tile(r, eight: bool, nodata: float | None):
+    """Decode one tile row and label its components: (arr, labels, n,
+    base), where base is the tile's global cid prefix (_cid_base) and
+    pixels equal to `nodata` (unless None) are excluded (label -1)."""
+    arr = np.frombuffer(r.payload, dtype=np.dtype(r.dtype)).reshape(r.bh, r.bw)
+    valid = None if nodata is None else arr != nodata
+    labels, n = label_components(arr, eight=eight, valid=valid)
+    if n >= (1 << 21):
+        raise ValueError(
+            f"tile ({r.block_x},{r.block_y}) of {r.image_id} band {r.band} "
+            f"has {n} local components — exceeds the 21-bit cid budget; "
+            "use tiles smaller than 2048x1024 px")
+    return arr, labels, n, _cid_base(int(r.block_x), int(r.block_y))
 
-    dp = df.sparkSession.sparkContext.defaultParallelism
-    # width scales with the incoming partitioning (cheap plan-side
-    # metadata, no job): a 6-tile toy input doesn't pay for 4*dp empty
-    # tasks, a wide scan still fans out to the full 4*dp. Floor is 8 —
-    # not dp — because an empty Python task still costs a worker
-    # round-trip (~0.15 s of pure scheduling per 32-task stage measured
-    # on the toy sieve input); 2x the incoming width keeps mid-size
-    # scans at full fan-out.
-    n = max(8, min(dp * 4, df.rdd.getNumPartitions() * 2))
-    return df.repartition(n, *keys)
+
+def _border_strips(r, arr, labels, base: int, eight: bool):
+    """Yield the tile's border strips as (key, side, vals, cids) — one
+    per edge shared with a neighbour tile, keyed by the border line
+    ("v:x:y" / "h:x:y"; side "a" is the tile left of / above it), plus
+    under 8-connectivity the one-pixel tile-corner strips between
+    diagonal tiles ("cd:" down-right, "ca:" up-right diagonal). cids are
+    global (base | label), -1 for excluded pixels. Slices stay 2-D so a
+    zero-size tile gives empty strips instead of an IndexError."""
+    x0, y0, bw, bh = int(r.x0), int(r.y0), int(r.bw), int(r.bh)
+    right, left = x0 + bw < int(r.w), x0 > 0
+    below, above = y0 + bh < int(r.h), y0 > 0
+    strips = []
+    if right:
+        strips.append((f"v:{x0 + bw}:{y0}", "a", np.s_[:, -1:]))
+    if left:
+        strips.append((f"v:{x0}:{y0}", "b", np.s_[:, :1]))
+    if below:
+        strips.append((f"h:{x0}:{y0 + bh}", "a", np.s_[-1:, :]))
+    if above:
+        strips.append((f"h:{x0}:{y0}", "b", np.s_[:1, :]))
+    if eight:
+        if right and below:
+            strips.append((f"cd:{x0 + bw}:{y0 + bh}", "a", np.s_[-1:, -1:]))
+        if left and above:
+            strips.append((f"cd:{x0}:{y0}", "b", np.s_[:1, :1]))
+        if left and below:
+            strips.append((f"ca:{x0}:{y0 + bh}", "a", np.s_[-1:, :1]))
+        if right and above:
+            strips.append((f"ca:{x0 + bw}:{y0}", "b", np.s_[:1, -1:]))
+    for key, side, sl in strips:
+        labs = labels[sl].ravel()
+        yield (key, side, arr[sl].ravel().astype(np.float64).tolist(),
+               np.where(labs >= 0, labs | base, -1).tolist())
+
+
+def _border_pairs(strips: DataFrame, eight: bool) -> DataFrame:
+    """Pair the two sides of every border line (strips from
+    _border_strips) into (image_id, band, cid_a, cid_b, eq) rows: eq =
+    equal values, an EQUIVALENCE (one component across the seam); else a
+    straight-neighbour ADJACENCY. Diagonal (8-connectivity) and corner
+    neighbours only ever yield equivalences. Pairs are distinct per
+    border line.
+
+    Pure elementwise array comparison, so it runs as ONE JVM aggregation
+    + higher-order expressions (guide §4.1: built-ins over Python; a
+    Python pairing cost an Arrow stage of near-empty worker round-trips
+    on small inputs and a Python crossing of every strip at scale).
+    Each interior border line has exactly one 'a' and one 'b' strip, so
+    a groupBy(key) with conditional max pulls both sides into one row
+    with a single exchange (no self-join, no sort); the two lists are
+    then zip-compared via element_at, and array_distinct dedups without
+    a shuffle."""
+    from pyspark.sql import functions as F
+
+    jo = (strips.groupBy("image_id", "band", "key")
+          .agg(F.max(F.when(F.col("side") == "a",
+                            F.struct(F.col("vals"), F.col("cids"))))
+               .alias("__sa"),
+               F.max(F.when(F.col("side") == "b",
+                            F.struct(F.col("vals"), F.col("cids"))))
+               .alias("__sb"))
+          .filter(F.col("__sa").isNotNull() & F.col("__sb").isNotNull())
+          .select("image_id", "band", "key",
+                  F.col("__sa.vals").alias("va"),
+                  F.col("__sa.cids").alias("ca"),
+                  F.col("__sb.vals").alias("vb"),
+                  F.col("__sb.cids").alias("cb")))
+    nlen = F.least(F.size("va"), F.size("vb"))
+    corner = (F.col("key").startswith("cd:")
+              | F.col("key").startswith("ca:"))
+
+    def pairs_for(off: int):
+        # 1-based index range [1+max(0,-off), n-max(0,off)], empty unless
+        # n > |off| — guarded, since sequence() runs BACKWARDS on an
+        # empty range (sequence(1, 0) = [1, 0]) and element_at then
+        # indexes past a short strip.
+        # Equality must be NaN-exclusive: Spark's `=` treats
+        # NaN = NaN as TRUE, but label_components' intra-tile test
+        # treats NaN pixels as never-equal singletons — a NaN-NaN border
+        # pair is an ADJACENCY, not an equivalence.
+        seq = F.sequence(F.lit(1 + max(0, -off)), nlen - F.lit(max(0, off)))
+
+        def mk(i):
+            x = F.element_at("va", i)
+            y = F.element_at("vb", i + off)
+            return F.struct(
+                F.element_at("ca", i).alias("cid_a"),
+                F.element_at("cb", i + off).alias("cid_b"),
+                ((x == y) & ~(F.isnan(x) & F.isnan(y))).alias("eq"),
+                F.lit(off == 0).alias("c0"))
+
+        return F.when(nlen > abs(off), F.transform(seq, mk)).otherwise(
+            F.array().cast("array<struct<cid_a:bigint,cid_b:bigint,"
+                           "eq:boolean,c0:boolean>>"))
+
+    allp = pairs_for(0)
+    if eight:
+        allp = F.when(corner, allp).otherwise(
+            F.concat(allp, pairs_for(1), pairs_for(-1)))
+    keep = F.filter(allp, lambda x: (x["cid_a"] >= 0) & (x["cid_b"] >= 0)
+                    & (x["eq"] | (x["c0"] & ~corner)))
+    dedup = F.array_distinct(F.transform(keep, lambda x: F.struct(
+        x["cid_a"].alias("cid_a"), x["cid_b"].alias("cid_b"),
+        x["eq"].alias("eq"))))
+    return (jo.select("image_id", "band", F.explode(dedup).alias("p"))
+            .select("image_id", "band", F.col("p.cid_a").alias("cid_a"),
+                    F.col("p.cid_b").alias("cid_b"), F.col("p.eq").alias("eq")))
 
 
 def _attach_roots(spark, comps: DataFrame, edges: DataFrame,
@@ -795,9 +900,10 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
       1. per-tile labeling (mapInPandas): local connected components,
          per-component partial stats + rectilinear rings in GLOBAL pixel
          coords, plus the tile's border strips (values + component ids);
-      2. border equivalences: strips groupBy their shared border line —
-         vectorized equality per pixel (±1 offsets and tile-corner keys
-         for 8-connectivity) → (cid_a, cid_b) edges;
+      2. border equivalences: the equal-valued (cid_a, cid_b) pairs of
+         _border_pairs, the JVM pairing sieve_tiles shares (strips meet
+         per shared border line; ±1 offsets and tile-corner keys for
+         8-connectivity);
       3. the edge graph (bounded by border-component count, ~data/tile_w)
          maps every provisional id to its root: union-find driver-side
          while it fits under max_border_edges, else a fully distributed
@@ -815,23 +921,13 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
     from pyspark.sql import functions as F
 
     spark = tiles.sparkSession
+    mask_nodata = nodata if use_nodata_mask else None
 
     def phase1(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                dt = np.dtype(r.dtype)
-                arr = np.frombuffer(r.payload, dtype=dt).reshape(r.bh, r.bw)
-                valid = None
-                if use_nodata_mask and nodata is not None:
-                    valid = arr != nodata
-                labels, n = label_components(arr, eight=eight, valid=valid)
-                if n >= (1 << 21):
-                    raise ValueError(
-                        f"polygonize: tile ({r.block_x},{r.block_y}) has {n} "
-                        "local components — exceeds the 21-bit cid budget; "
-                        "use tiles smaller than 2048x1024 px")
-                base = _cid_base(int(r.block_x), int(r.block_y))
+                arr, labels, n, base = _label_tile(r, eight, mask_nodata)
                 # per-component stats + bboxes in ONE vectorized pass,
                 # then trace each component inside ITS bbox slice only.
                 # The previous `labels == ci` over the full tile per
@@ -868,37 +964,9 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                                  float(vals[ci]), int(sizes[ci]),
                                  G.to_wkb(g), g.area(),
                                  None, None, None, None))
-
-                def cids_of(lab_line):
-                    return [int(base | v) if v >= 0 else -1 for v in lab_line]
-
-                def strip(key, side, vals, labs):
+                for strip in _border_strips(r, arr, labels, base, eight):
                     rows.append(("strip", r.image_id, int(r.band), 0, 0.0, 0,
-                                 None, 0.0, key, side,
-                                 [float(v) for v in vals], cids_of(labs)))
-
-                x0, y0, bw, bh = int(r.x0), int(r.y0), int(r.bw), int(r.bh)
-                W, H = int(r.w), int(r.h)
-                if x0 + bw < W:   # right border exists
-                    strip(f"v:{x0 + bw}:{y0}", "a", arr[:, -1], labels[:, -1])
-                if x0 > 0:
-                    strip(f"v:{x0}:{y0}", "b", arr[:, 0], labels[:, 0])
-                if y0 + bh < H:   # bottom border
-                    strip(f"h:{x0}:{y0 + bh}", "a", arr[-1, :], labels[-1, :])
-                if y0 > 0:
-                    strip(f"h:{x0}:{y0}", "b", arr[0, :], labels[0, :])
-                if eight:  # tile-corner diagonals between diagonal tiles
-                    if x0 + bw < W and y0 + bh < H:
-                        strip(f"cd:{x0 + bw}:{y0 + bh}", "a",
-                              arr[-1:, -1], labels[-1:, -1])
-                    if x0 > 0 and y0 > 0:
-                        strip(f"cd:{x0}:{y0}", "b", arr[:1, 0], labels[:1, 0])
-                    if x0 > 0 and y0 + bh < H:
-                        strip(f"ca:{x0}:{y0 + bh}", "a",
-                              arr[-1:, 0], labels[-1:, 0])
-                    if x0 + bw < W and y0 > 0:
-                        strip(f"ca:{x0 + bw}:{y0}", "b",
-                              arr[:1, -1], labels[:1, -1])
+                                 None, 0.0) + strip)
             cols = ["kind", "image_id", "band", "cid", "value", "n_pixels",
                     "wkb", "area", "key", "side", "vals", "cids"]
             yield pd.DataFrame(rows, columns=cols)
@@ -921,42 +989,10 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
         strips = raw.filter(F.col("kind") == "strip") \
                     .select("image_id", "band", "key", "side", "vals", "cids")
 
-        def make_edges(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            a = pdf[pdf["side"] == "a"]
-            b = pdf[pdf["side"] == "b"]
-            if len(a) != 1 or len(b) != 1:
-                return pd.DataFrame({"image_id": [], "band": [],
-                                     "cid_a": [], "cid_b": []})
-            va = np.asarray(a["vals"].iloc[0], dtype=np.float64)
-            ca = np.asarray(a["cids"].iloc[0], dtype=np.int64)
-            vb = np.asarray(b["vals"].iloc[0], dtype=np.float64)
-            cb = np.asarray(b["cids"].iloc[0], dtype=np.int64)
-            offs = (0,) if not eight or key[2].startswith(("cd", "ca")) \
-                else (-1, 0, 1)
-            pairs = set()
-            n = min(len(va), len(vb))
-            for off in offs:
-                lo, hi = max(0, -off), min(n, n - off)
-                if hi <= lo:
-                    continue
-                ia = np.arange(lo, hi)
-                ib = ia + off
-                m = ((va[ia] == vb[ib]) & (ca[ia] >= 0) & (cb[ib] >= 0))
-                for x, y in zip(ca[ia][m].tolist(), cb[ib][m].tolist()):
-                    pairs.add((x, y))
-            if not pairs:
-                return pd.DataFrame({"image_id": [], "band": [],
-                                     "cid_a": [], "cid_b": []})
-            arr = np.array(sorted(pairs), dtype=np.int64)
-            return pd.DataFrame({"image_id": key[0], "band": key[1],
-                                 "cid_a": arr[:, 0], "cid_b": arr[:, 1]})
-
-        edges = _declare_parallelism(strips, "image_id", "band", "key") \
-            .groupBy("image_id", "band", "key").applyInPandas(
-            make_edges,
-            schema="image_id string, band int, cid_a long, cid_b long"
-        ).distinct()
-
+        # no explicit width here: the pairing is JVM-only and uncached, so
+        # AQE coalesces it and _attach_roots' LIMIT collect reads it in
+        # one job (8 explicit partitions took 3: 1, 4, then 3 partitions)
+        edges = _border_pairs(strips, eight).filter(F.col("eq")).drop("eq")
         comps = _attach_roots(spark, comps, edges, max_border_edges)
 
         def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -980,7 +1016,8 @@ def polygonize_tiles(tiles: DataFrame, *, eight: bool = False,
                 "n_parts": [n_parts], "geometry": [geom],
                 "area": [float(pdf["area"].sum())]})
 
-        out = _declare_parallelism(comps, "image_id", "band", "root") \
+        out = comps.repartition(adaptive_parallelism(comps),
+                                "image_id", "band", "root") \
             .groupBy("image_id", "band", "root").applyInPandas(
             merge, schema=_FEATURES2_SCHEMA)
         out = out.localCheckpoint(eager=True)
@@ -1018,7 +1055,8 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
       1. per-tile labeling (mapInPandas): component partials
          (cid, value, n_pixels), border strips, and intra-tile
          4-neighbor adjacency label pairs;
-      2. border strips pair up per shared border line: equal values →
+      2. border strips pair up per shared border line (_border_pairs,
+         shared with polygonize_tiles): equal values →
          EQUIVALENCE edges (same component), different values →
          ADJACENCY edges (merge candidates). Roots via _attach_roots
          (driver union-find under the guard, pointer doubling beyond);
@@ -1052,36 +1090,26 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                          "x0", "y0", "bw", "bh", "w", "h", "dtype",
                          "payload", "caption")
 
+    mask_nodata = nodata if use_nodata_mask else None
+
     def phase1(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                dt = np.dtype(r.dtype)
-                arr = np.frombuffer(r.payload, dtype=dt).reshape(r.bh, r.bw)
-                valid = None
-                if use_nodata_mask and nodata is not None:
-                    valid = arr != nodata
-                labels, n = label_components(arr, eight=eight, valid=valid)
-                if n >= (1 << 21):
-                    raise ValueError(
-                        f"sieve: tile ({r.block_x},{r.block_y}) has {n} local "
-                        "components — exceeds the 21-bit cid budget; use "
-                        "tiles smaller than 2048x1024 px")
-                base = _cid_base(int(r.block_x), int(r.block_y))
+                arr, labels, n, base = _label_tile(r, eight, mask_nodata)
                 fl = labels.ravel()
-                av = arr.ravel().astype(np.float64)
                 ok = fl >= 0
-                if ok.any():
-                    sizes = np.bincount(fl[ok], minlength=n)
-                    idx = np.flatnonzero(ok)
-                    # first occurrence per label (scan order) = the
-                    # component's representative value
-                    first = np.full(n, len(fl), dtype=np.int64)
-                    np.minimum.at(first, fl[idx], idx)
-                    for ci in range(n):
-                        rows.append(("comp", r.image_id, int(r.band),
-                                     base | ci, -1, float(av[first[ci]]),
-                                     int(sizes[ci]), None, None, None, None))
+                sizes = np.bincount(fl[ok], minlength=n)
+                idx = np.flatnonzero(ok)
+                # first occurrence per label (scan order) = the
+                # component's representative value
+                first = np.full(n, len(fl), dtype=np.int64)
+                np.minimum.at(first, fl[idx], idx)
+                vals = arr.ravel()[first]
+                for ci in range(n):
+                    rows.append(("comp", r.image_id, int(r.band), base | ci,
+                                 -1, float(vals[ci]), int(sizes[ci]),
+                                 None, None, None, None))
                 # intra-tile 4-neighbor adjacency between components
                 for sl_a, sl_b in ((np.s_[:, 1:], np.s_[:, :-1]),
                                    (np.s_[1:, :], np.s_[:-1, :])):
@@ -1096,37 +1124,9 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                         rows.append(("adj", r.image_id, int(r.band),
                                      base | a, base | b, 0.0, 0,
                                      None, None, None, None))
-
-                def cids_of(lab_line):
-                    return [int(base | v) if v >= 0 else -1 for v in lab_line]
-
-                def strip(key, side, vals, labs):
+                for strip in _border_strips(r, arr, labels, base, eight):
                     rows.append(("strip", r.image_id, int(r.band), 0, -1,
-                                 0.0, 0, key, side,
-                                 [float(v) for v in vals], cids_of(labs)))
-
-                x0, y0, bw, bh = int(r.x0), int(r.y0), int(r.bw), int(r.bh)
-                W, H = int(r.w), int(r.h)
-                if x0 + bw < W:
-                    strip(f"v:{x0 + bw}:{y0}", "a", arr[:, -1], labels[:, -1])
-                if x0 > 0:
-                    strip(f"v:{x0}:{y0}", "b", arr[:, 0], labels[:, 0])
-                if y0 + bh < H:
-                    strip(f"h:{x0}:{y0 + bh}", "a", arr[-1, :], labels[-1, :])
-                if y0 > 0:
-                    strip(f"h:{x0}:{y0}", "b", arr[0, :], labels[0, :])
-                if eight:
-                    if x0 + bw < W and y0 + bh < H:
-                        strip(f"cd:{x0 + bw}:{y0 + bh}", "a",
-                              arr[-1:, -1], labels[-1:, -1])
-                    if x0 > 0 and y0 > 0:
-                        strip(f"cd:{x0}:{y0}", "b", arr[:1, 0], labels[:1, 0])
-                    if x0 > 0 and y0 + bh < H:
-                        strip(f"ca:{x0}:{y0 + bh}", "a",
-                              arr[-1:, 0], labels[-1:, 0])
-                    if x0 + bw < W and y0 > 0:
-                        strip(f"ca:{x0 + bw}:{y0}", "b",
-                              arr[:1, -1], labels[:1, -1])
+                                 0.0, 0) + strip)
             cols = ["kind", "image_id", "band", "cid", "cid_b", "value",
                     "n_pixels", "key", "side", "vals", "cids"]
             yield pd.DataFrame(rows, columns=cols)
@@ -1142,77 +1142,15 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                        .select("image_id", "band",
                                F.col("cid").alias("cid_a"), "cid_b")
 
-        # Border pairing is pure elementwise array comparison — run it as
-        # ONE JVM aggregation + higher-order expressions instead of the
-        # former repartition + applyInPandas (guide §4.1: built-ins over
-        # Python; the Python version cost a 32-task Arrow stage of
-        # near-empty worker round-trips on small inputs and a full
-        # Python crossing of every border strip at scale). phase1 emits
-        # exactly one 'a' and one 'b' strip per interior border line, so
-        # a groupBy(key) with conditional max pulls both sides into one
-        # row with a single exchange (no self-join, no sort); the pair
-        # lists are then zip-compared via element_at, and array_distinct
-        # replaces the old per-key set-dedup without a shuffle.
-        # explicit keyed repartition sized from the input: the persist()
-        # on `pairs` disables AQE re-optimization inside the cached
-        # fragment (canChangeCachedPlanOutputPartitioning default), so
-        # without this the agg exchange runs at the full
-        # shuffle-partition count with no runtime coalescing — 32 reduce
-        # tasks for a 6-tile input
-        strips = _declare_parallelism(strips, "image_id", "band", "key")
-        jo = (strips.groupBy("image_id", "band", "key")
-              .agg(F.max(F.when(F.col("side") == "a",
-                                F.struct(F.col("vals"), F.col("cids"))))
-                   .alias("__sa"),
-                   F.max(F.when(F.col("side") == "b",
-                                F.struct(F.col("vals"), F.col("cids"))))
-                   .alias("__sb"))
-              .filter(F.col("__sa").isNotNull() & F.col("__sb").isNotNull())
-              .select("image_id", "band", "key",
-                      F.col("__sa.vals").alias("va"),
-                      F.col("__sa.cids").alias("ca"),
-                      F.col("__sb.vals").alias("vb"),
-                      F.col("__sb.cids").alias("cb")))
-        nlen = F.least(F.size("va"), F.size("vb"))
-        corner = (F.col("key").startswith("cd:")
-                  | F.col("key").startswith("ca:"))
-
-        def pairs_for(off: int):
-            # 1-based index range [1+max(0,-off), n-max(0,off)].
-            # Equality must be NaN-exclusive: Spark's `=` treats
-            # NaN = NaN as TRUE, but the numpy pass this replaces (and
-            # label_components' intra-tile test) treat NaN pixels as
-            # never-equal singletons — a NaN-NaN border pair is an
-            # ADJACENCY, not an equivalence.
-            seq = F.sequence(F.lit(1 + max(0, -off)), nlen - F.lit(max(0, off)))
-
-            def mk(i):
-                x = F.element_at("va", i)
-                y = F.element_at("vb", i + off)
-                return F.struct(
-                    F.element_at("ca", i).alias("cid_a"),
-                    F.element_at("cb", i + off).alias("cid_b"),
-                    ((x == y) & ~(F.isnan(x) & F.isnan(y))).alias("eq"),
-                    F.lit(off == 0).alias("c0"))
-
-            return F.transform(seq, mk)
-
-        allp = pairs_for(0)
-        if eight:
-            diag = F.when(nlen >= 2, F.concat(pairs_for(1), pairs_for(-1))) \
-                .otherwise(F.array().cast(
-                    "array<struct<cid_a:bigint,cid_b:bigint,eq:boolean,c0:boolean>>"))
-            allp = F.when(corner, allp).otherwise(F.concat(allp, diag))
-        keep = F.filter(allp, lambda x: (x["cid_a"] >= 0) & (x["cid_b"] >= 0)
-                        & (x["eq"] | (x["c0"] & ~corner)))
-        dedup = F.array_distinct(F.transform(keep, lambda x: F.struct(
-            x["cid_a"].alias("cid_a"), x["cid_b"].alias("cid_b"),
-            x["eq"].alias("eq"))))
-        pairs = (jo.select("image_id", "band",
-                           F.explode(dedup).alias("p"))
-                 .select("image_id", "band", F.col("p.cid_a").alias("cid_a"),
-                         F.col("p.cid_b").alias("cid_b"),
-                         F.col("p.eq").alias("eq"))).persist()
+        # equivalences AND adjacencies both read the pairs, so they are
+        # cached — and a persist() disables AQE re-optimization inside the
+        # cached fragment (canChangeCachedPlanOutputPartitioning default):
+        # without an explicit keyed repartition sized from the input, the
+        # pairing's agg exchange runs at the full shuffle-partition count
+        # with no runtime coalescing — 32 reduce tasks for a 6-tile input
+        strips = strips.repartition(adaptive_parallelism(strips),
+                                    "image_id", "band", "key")
+        pairs = _border_pairs(strips, eight).persist()
         # full materialization before _attach_roots' LIMIT-bounded
         # collect (limits short-circuit -> partial caches -> the rewrite
         # job re-ran phase1; round-4 scaling series finding)
@@ -1297,16 +1235,12 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
                 return out
             payloads = []
             for r in tpdf.itertuples(index=False):
-                dt = np.dtype(r.dtype)
-                arr = np.frombuffer(r.payload, dtype=dt).reshape(r.bh, r.bw).copy()
-                valid = None
-                if use_nodata_mask and nodata is not None:
-                    valid = arr != nodata
-                labels, _ = label_components(arr, eight=eight, valid=valid)
+                arr, labels, _, _ = _label_tile(r, eight, mask_nodata)
+                arr = arr.copy()
                 for d in dpdf.itertuples(index=False):
                     local = int(d.cid) & ((1 << 21) - 1)
                     arr[labels == local] = np.asarray(
-                        d.new_value).astype(dt)
+                        d.new_value).astype(arr.dtype)
                 payloads.append(arr.tobytes())
             out["payload"] = payloads
             return out
@@ -1314,8 +1248,10 @@ def sieve_tiles(tiles: DataFrame, threshold: int, *, eight: bool = False,
         keys = ["image_id", "band", "block_x", "block_y"]
         from godal_spark.operators.tiling import TILE_SCHEMA
 
-        result = (_declare_parallelism(tiles, *keys).groupBy(*keys)
-                  .cogroup(_declare_parallelism(cid_dec, *keys).groupBy(*keys))
+        result = (tiles.repartition(adaptive_parallelism(tiles), *keys)
+                  .groupBy(*keys)
+                  .cogroup(cid_dec.repartition(adaptive_parallelism(cid_dec),
+                                               *keys).groupBy(*keys))
                   .applyInPandas(rewrite, schema=TILE_SCHEMA))
         return result
     finally:

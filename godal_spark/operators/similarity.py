@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from godal_spark.plans.skew import spread_small_scan
+
 
 MAX_DRIVER_QUERIES = 100_000
 
@@ -83,9 +85,8 @@ def brute_force_topk(emb: DataFrame, query_ids, k: int = 10, *,
     # small-corpus parquet can read as one split — spread the CPU-bound
     # cosine pass over the cores (no-op when the table already has
     # >= cores splits; same hazard as dedup.with_shingle_minhash_fused)
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    scan = emb.repartition(par) if emb.rdd.getNumPartitions() < par else emb
-    partial = scan.mapInPandas(gen, schema="qid long, pid long, sim double")
+    partial = spread_small_scan(emb).mapInPandas(
+        gen, schema="qid long, pid long, sim double")
     w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("pid").asc())
     return (partial.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))

@@ -103,49 +103,38 @@ def with_block_grid(df: DataFrame, w: str | Column = "w", h: str | Column = "h",
 
 
 def with_overview_levels(df: DataFrame, w: str = "w", h: str = "h",
-                         min_size: int | Column = 256) -> DataFrame:
+                         min_size: int = 256) -> DataFrame:
     """Adds ``levels: array<int>`` — the auto-computed pyramid plan.
 
     Pure built-ins: k-th level (k≥1) exists iff shiftright(w, k-1) > m
     or shiftright(h, k-1) > m — identical to the reference's halving
     loop since Go's integer halving chain equals bit-shift.
     """
-    if isinstance(min_size, int):
-        # Closed integer form (guide §1.2 step 2 — per-task work). The
-        # level predicate `(w >> (k-1)) > m OR (h >> (k-1)) > m` is
-        # monotone decreasing in k, so the level set is contiguous
-        # 1..kmax with kmax = bitlen(dim div (m+1)) = floor(log2(dim div
-        # (m+1))) + 1 per dimension (0 when dim <= m). That replaces the
-        # interpreted 31-step filter scan — and the original
-        # POWER-of-double form it already replaced measured 6x slower on
-        # a 200k-image plan (3.9 s -> 0.6 s for the overview_tiles
-        # rollup at sf1.0; the expression is also evaluated twice, once
-        # in the Generate's size()>0 pre-filter, once in the Project).
-        # floor/log2 double math is exact here: dim/(m+1) sits >= 1/(m+1)
-        # away from any wrong integer, and log2 of an exact int is
-        # >= ~1/(x ln2) away from any wrong integer — both far above
-        # double rounding error for 32-bit dims.
-        mp1 = min_size + 1
+    # Closed integer form (guide §1.2 step 2 — per-task work). The level
+    # predicate `(w >> (k-1)) > m OR (h >> (k-1)) > m` is monotone
+    # decreasing in k, so the level set is contiguous 1..kmax with kmax =
+    # bitlen(dim div (m+1)) = floor(log2(dim div (m+1))) + 1 per dimension
+    # (0 when dim <= m). That replaces the interpreted 31-step filter scan
+    # — and the original POWER-of-double form it already replaced
+    # measured 6x slower on a 200k-image plan (3.9 s -> 0.6 s for the
+    # overview_tiles rollup at sf1.0; the expression is also evaluated
+    # twice, once in the Generate's size()>0 pre-filter, once in the
+    # Project). floor/log2 double math is exact here: dim/(m+1) sits
+    # >= 1/(m+1) away from any wrong integer, and log2 of an exact int is
+    # >= ~1/(x ln2) away from any wrong integer — both far above double
+    # rounding error for 32-bit dims.
+    mp1 = min_size + 1
 
-        def _kmax(c: str) -> str:
-            return (f"(CASE WHEN {c} > {min_size} THEN "
-                    f"cast(floor(log2(floor({c} / {mp1}))) + 1 as int) "
-                    f"ELSE 0 END)")
+    def _kmax(c: str) -> str:
+        return (f"(CASE WHEN {c} > {min_size} THEN "
+                f"cast(floor(log2(floor({c} / {mp1}))) + 1 as int) "
+                f"ELSE 0 END)")
 
-        n = f"greatest({_kmax(w)}, {_kmax(h)})"
-        return df.withColumn("levels", F.expr(
-            f"CASE WHEN {n} < 1 THEN cast(array() as array<int>) "
-            f"ELSE transform(sequence(1, {n}), "
-            f"k -> cast(shiftleft(1, k) as int)) END"))
-    m = min_size
-    ks = F.sequence(F.lit(1), F.lit(31))
-    # w >> (k-1) as floor(w / 2^(k-1)) — shiftright needs a literal count,
-    # but the shift amount here is the lambda variable
-    halved = lambda c, k: F.floor(F.col(c) / F.pow(F.lit(2.0), (k - 1).cast("double")))  # noqa: E731
-    cond = lambda k: (halved(w, k) > m) | (halved(h, k) > m)  # noqa: E731
-    return df.withColumn(
-        "levels",
-        F.transform(F.filter(ks, cond), lambda k: F.pow(F.lit(2.0), k.cast("double")).cast("int")))
+    n = f"greatest({_kmax(w)}, {_kmax(h)})"
+    return df.withColumn("levels", F.expr(
+        f"CASE WHEN {n} < 1 THEN cast(array() as array<int>) "
+        f"ELSE transform(sequence(1, {n}), "
+        f"k -> cast(shiftleft(1, k) as int)) END"))
 
 
 # ---------------------------------------------------------------------------

@@ -596,3 +596,75 @@ def test_sieve_tiles_float_nan_border(spark):
     want = PZ.sieve_array(arr, 3)
     same = (out == want) | (np.isnan(out) & np.isnan(want))
     assert same.all()
+    # the same seam pairing feeds polygonize_tiles: the NaN|NaN pair
+    # stays two singleton features, as in the gathered polygonize (a NaN
+    # value crosses the Arrow boundary as NULL)
+
+    def feats(rows):
+        out = []
+        for r in rows:
+            nanlike = r.value is None or r.value != r.value
+            out.append((nanlike, 0.0 if nanlike else r.value, r.n_pixels))
+        return sorted(out)
+
+    gathered = PZ.polygonize(tiles, use_nodata_mask=False).collect()
+    dist = PZ.polygonize_tiles(tiles, use_nodata_mask=False).collect()
+    assert feats(dist) == feats(gathered)
+    assert [f for f in feats(dist) if f[0]] == [(True, 0.0, 1)] * 3
+
+
+@pytest.mark.parametrize("eight", [False, True])
+def test_tiles_empty_border_strips(spark, eight):
+    """Zero-height tiles emit zero-length border strips: the JVM pairing
+    must not index into them (a backwards sequence(1, 0) raised
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT). sieve returns the input tiles,
+    polygonize returns no features."""
+    from godal_spark.operators import polygonize as PZ
+    from godal_spark.operators.tiling import TILE_SCHEMA
+
+    rows = [("e", 0, 0, bx, 0, 4 * bx, 0, 4, 0, 8, 0, "uint8", b"", None)
+            for bx in (0, 1)]
+    tiles = spark.createDataFrame(rows, TILE_SCHEMA)
+    got = PZ.sieve_tiles(tiles, 2, eight=eight).collect()
+    assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in rows)
+    assert PZ.polygonize_tiles(tiles, eight=eight).count() == 0
+
+
+@pytest.mark.parametrize("eight", [False, True])
+def test_border_pairs_rows_and_plan(spark, eight):
+    """The one border pairing both tile operators share: equal values
+    (NaN-exclusive) are equivalences, unequal straight neighbours are
+    adjacencies, diagonal and corner neighbours count only when equal,
+    masked (-1) pixels, one-sided and empty strips give nothing. The
+    plan is JVM built-ins only: no Python pairing stage."""
+    from godal_spark.operators import polygonize as PZ
+
+    nan = float("nan")
+    rows = [
+        ("i", 0, "v:4:0", "a", [5.0, 6.0, nan, 6.0], [1, 2, 3, -1]),
+        ("i", 0, "v:4:0", "b", [6.0, 6.0, nan, 6.0], [7, 8, 9, 6]),
+        ("i", 0, "h:0:4", "a", [2.0], [11]),          # no 'b' side
+        ("i", 0, "h:4:4", "a", [], []),
+        ("i", 0, "h:4:4", "b", [], []),
+    ]
+    if eight:  # tile-corner strips exist only under 8-connectivity
+        rows += [("i", 0, "cd:4:4", "a", [3.0], [12]),
+                 ("i", 0, "cd:4:4", "b", [4.0], [13]),
+                 ("i", 0, "ca:8:4", "a", [4.0], [14]),
+                 ("i", 0, "ca:8:4", "b", [4.0], [15])]
+    strips = spark.createDataFrame(
+        rows, "image_id string, band int, key string, side string, "
+              "vals array<double>, cids array<long>")
+    pairs = PZ._border_pairs(strips, eight)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "ArrowEvalPython" not in plan
+    got = sorted((r.image_id, r.band, r.cid_a, r.cid_b, r.eq)
+                 for r in pairs.collect())
+    want = [("i", 0, 1, 7, False), ("i", 0, 2, 8, True),
+            ("i", 0, 3, 9, False)]
+    if eight:
+        # a[1] = b[0] diagonally; a corner pair counts only when equal,
+        # so cd (3 vs 4) is dropped and ca (4 = 4) kept
+        want += [("i", 0, 2, 7, True), ("i", 0, 14, 15, True)]
+    assert got == sorted(want)
